@@ -1,5 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
+
+import graft.queries.{Catalog, GraftQuery}
+import graft.sources.Layouts
+
 object Bench {
   /** Session config shared by Bench/Verify so the measured plan is the
     * shipped plan:
@@ -34,93 +38,38 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // generic warmup so JVM/codegen/parquet-reader init isn't billed to
-    // whichever query happens to run first
-    spark.range(1000).selectExpr("sum(id)").collect()
-    try spark.read.parquet(s"$sfDir/region.parquet").count()
-    catch { case _: Throwable => () }
-    // warm every write-once storage layout (bucketed tables, shingle
-    // index, pair/component graphs, IVF quantizer) BEFORE timing:
-    // layouts are fixture infrastructure written once per corpus, and
-    // a cold warehouse otherwise bills the one-time build to whichever
-    // query reaches it first in pass 1 (round-7 verdict: q51). Failures
-    // are non-fatal — the affected query then times its own build,
-    // which is the pre-existing behavior.
-    // the per-layout wall time is CAPTURED and emitted with the bench
-    // line (round-12 verdict item 2): the warm is untimed per-query by
-    // design, but its cost must be visible in the artifact
-    val layoutWarm: Seq[(String, Double)] =
-      try graft.sources.Layouts.warm(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] layout warm failed: ${e.getMessage}")
-        Seq.empty
-      }
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    spark.catalog.clearCache()
-    // Sorted name order (queries is a hash-ordered Map) + full storage
-    // reset between queries: localCheckpoint blocks created inside a
-    // query (e.g. the MinHash shingle table) must not occupy storage
-    // memory while later queries are timed.
-    //
-    // Each query is timed twice and the minimum reported — standard
-    // steady-state methodology. The box has bursty co-tenant load
-    // (identical binaries measured 49 s..365 s total in one afternoon);
-    // a single shot times the burst, not the engine, and min-of-2 also
-    // keeps one-time setup (JIT, codegen cache, q51's bucketed-table
-    // write — a storage layout written once, like the fixtures) out of
-    // the per-query figure. Storage is reset after every run, so run 2
-    // re-executes the full plan — no result caching is being measured.
-    // Executed via the noop sink, not count(): a count() lets the
-    // optimizer strip each query's final orderBy (EliminateSorts under
-    // Aggregate) and prune the output projection to zero columns, so
-    // queries with expensive final stages would be systematically
-    // under-measured. The noop write materializes every output column
-    // in order — the plan Verify ships is the plan Bench times.
-    // A throwing query reports -1 (never a silent time-to-failure)
-    // with the error on stderr.
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
-        }
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      spark.catalog.clearCache()
-      if (ok) dt else -1.0
-    }
-    // Reps are taken as two FULL PASSES over the suite, not
-    // back-to-back: observed co-tenant bursts last minutes and
-    // swallow 3 consecutive reps of the same query (r3: q38/q39/q40,
-    // steady at 0.2-0.7 s, measured 9-10 s across all immediate
-    // retries). Two sweeps put a query's samples ~minutes apart, so a
-    // burst has to span the whole run to poison a min. Queries whose
-    // min still looks burst-sized get one more targeted rep at the
-    // very end.
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-    val pass1 = ordered.map { case (name, fn) => name -> once(name, fn) }
-    val pass2 = ordered.map { case (name, fn) => name -> once(name, fn) }
+    val spark = session()
+    // the per-layout warm seconds go into the bench line and the
+    // detail: the warm is untimed per query, but its cost must be
+    // visible in the artifact
+    val layoutWarm = warm(spark, sfDir)
+    // Each query is timed in two FULL PASSES over the name-sorted
+    // catalog and the minimum reported. The box has bursty co-tenant
+    // load lasting minutes (identical binaries measured 49-365 s
+    // total), long enough to swallow back-to-back reps of one query;
+    // two sweeps put a query's samples minutes apart, so a burst has
+    // to span the whole run to poison a min. Min-of-2 also keeps
+    // one-time setup (JIT, codegen cache) out of the per-query figure.
+    // Queries whose min still looks burst-sized get one more rep at
+    // the very end.
+    val ordered = select(Set.empty)
+    val pass1 = ordered.map(timeOnce(spark, sfDir, _))
+    val pass2 = ordered.map(timeOnce(spark, sfDir, _))
     // min over SUCCESSFUL reps only: a query that crashed in one pass
     // but ran in the other is a measurement (of the successful run),
     // not a failure — min(-1, t) would mark it failed and hide t
     def best(a: Double, b: Double): Double =
       if (a < 0) b else if (b < 0) a else math.min(a, b)
-    val mins = pass1.zip(pass2).map { case ((n, a), (_, b)) => n -> best(a, b) }
-    val results = mins.map { case (name, m2) =>
-      name -> (if (m2 > 2.0)
-        best(m2, once(name, SparkEntry.queries(name))) else m2)
+    val results = ordered.zip(pass1.zip(pass2)).map { case (q, (a, b)) =>
+      val m2 = best(a, b)
+      q.name -> (if (m2 > 2.0) best(m2, timeOnce(spark, sfDir, q)) else m2)
     }
-    // Artifact robustness: the r3 capture truncated the line's HEAD and
-    // kept the tail, eating the leading total. So the headline total now
-    // sits at the END of the object, per-query values are rounded to 3dp
-    // (shrinks the line ~3x), and queries are ordered cheapest-first so
-    // the costly ones — the ones worth reading — sit next to the total
-    // in the surviving tail. JSON key order is parser-irrelevant.
+    // The line must survive a capture that truncates its HEAD and keeps
+    // the tail: the headline total sits at the END of the object,
+    // per-query values are rounded to 3dp (a ~3x shorter line), and
+    // queries are ordered cheapest-first so the costly ones sit next to
+    // the total in the surviving tail. JSON key order is
+    // parser-irrelevant.
     def j(d: Double): String =
       BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     val qs = results.sortBy(_._2).map { case (k, v) => s"\"" + k + "\":" + j(v) }
@@ -140,19 +89,17 @@ object Bench {
       .map { case (k, v) => s"\"" + k + "\":" + j(v) }.mkString("{", ",", "}")
     val warmTotal = j(layoutWarm.map(_._2).sum)
     println(s"""{"unit":"sec","sf":"$sfDir","layout_warm_sec":$warmTotal,"layout_warm":$warmJson,"queries":$qs,"failed":$failedJson,"failed_count":${failed.size},"metric":"total","value":${j(total)}}""")
-    // Full per-query artifact INTO THE REPO (round-5 verdict #2): the
-    // driver-captured BENCH_r*.json line truncates its head past ~70
-    // queries, so cross-round common-subset sums — the comparison
-    // currency under co-tenant noise — needed tail archaeology. This
-    // file always carries every entry, name-sorted, one per line.
+    // The full per-query artifact: a captured line loses its head past
+    // ~70 queries, so this file always carries every entry,
+    // name-sorted, one per line — the input to common-subset sums, the
+    // comparison currency under co-tenant noise.
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
       "/root/repo/BENCH_DETAIL.json")
-    // Cross-round regression signal IN the artifact (round-6 verdict
-    // #6): sum this run vs the previous round's committed detail over
-    // their COMMON query names — the comparison currency under
-    // co-tenant noise (totals diverge whenever queries are added) —
-    // so the judge reads a number, not tail archaeology. The previous
-    // file is the highest-numbered committed BENCH_DETAIL_r*.json
+    // Regression signal in the artifact: this run vs the previous
+    // committed detail, summed over their COMMON query names (totals
+    // diverge whenever queries are added), so the comparison is a
+    // number in the file. The previous file is the highest-numbered
+    // committed BENCH_DETAIL_r*.json
     // (override via SPARK_GRAFT_BENCH_PREV); parse failures degrade
     // to a "_common_subset_vs_prev": null, never a crash.
     val commonSubset: String = try {
@@ -163,9 +110,9 @@ object Bench {
           val rx = "BENCH_DETAIL_r(\\d+)\\.json".r
           import scala.jdk.CollectionConverters._
           // never compare against the file THIS run is about to
-          // overwrite: a re-run in the same round would otherwise read
-          // the previous attempt's uncommitted detail as "prev" and
-          // report a same-binary noise delta as the cross-round signal
+          // overwrite: a re-run would otherwise read the previous
+          // attempt's uncommitted detail as "prev" and report a
+          // same-binary noise delta as the regression signal
           // normalize both sides: a relative or dotted detailPath must
           // still match the directory listing's entry for the same file
           val self = java.nio.file.Paths.get(detailPath)
@@ -214,5 +161,79 @@ object Bench {
     catch { case e: java.io.IOException =>
       System.err.println(s"[bench] detail write failed: ${e.getMessage}") }
     spark.stop()
+  }
+
+  /** The one local session every entry point runs its queries in:
+    * [[configure]] at `SPARK_GRAFT_CPUS` task slots (default 4). */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = configure(
+      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Storage reset after every query: localCheckpoint blocks and cached
+    * tables created inside one query (e.g. the MinHash shingle table)
+    * must not occupy storage memory while the next query runs, and a
+    * repeated run must re-execute its full plan, never read a cache. */
+  def reset(spark: SparkSession): Unit = {
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    spark.catalog.clearCache()
+  }
+
+  /** Untimed warm-up before the first timed query, returning seconds
+    * per write-once layout. JVM, codegen and parquet-reader init must
+    * not be billed to whichever query happens to run first; neither
+    * must a layout build (layouts are fixture infrastructure written
+    * once per corpus). A failed layout warm is non-fatal: the query
+    * that reads the layout then times its own build. `layouts = false`
+    * skips the layout builds, for profiling layout-free queries on a
+    * cold warehouse. */
+  def warm(spark: SparkSession, sfDir: String,
+           layouts: Boolean = true): Seq[(String, Double)] = {
+    spark.range(1000).selectExpr("sum(id)").collect()
+    try spark.read.parquet(s"$sfDir/region.parquet").count()
+    catch { case _: Throwable => () }
+    val seconds =
+      if (!layouts) Seq.empty
+      else try Layouts.warm(spark, sfDir)
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] layout warm failed: ${e.getMessage}")
+        Seq.empty
+      }
+    reset(spark)
+    seconds
+  }
+
+  /** Catalog entries named in `names`, in name order; an empty set
+    * selects the whole catalog. An unknown name fails loudly: a typo
+    * would otherwise run nothing and read as a green no-op. */
+  def select(names: Set[String]): Seq[GraftQuery] = {
+    val all = Catalog.all
+    val unknown = names -- all.map(_.name)
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
+    all.filter(q => names.isEmpty || names(q.name)).sortBy(_.name)
+  }
+
+  /** One timed run of `q`, then a [[reset]]: seconds, or -1 if the
+    * query throws (the error goes to stderr — never a silent
+    * time-to-failure). Executed through the noop sink, not count(): a
+    * count() lets the optimizer strip the final orderBy (EliminateSorts
+    * under Aggregate) and prune the output to zero columns, so
+    * expensive final stages would go unmeasured. The noop write
+    * materializes every output column in order — the plan Verify
+    * ships is the plan that is timed. */
+  def timeOnce(spark: SparkSession, sfDir: String, q: GraftQuery): Double = {
+    val t0 = System.nanoTime()
+    val ok =
+      try { q.run(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}"); false
+      }
+    val dt = (System.nanoTime() - t0) / 1e9
+    reset(spark)
+    if (ok) dt else -1.0
   }
 }

@@ -2,8 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftShims}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The catalog's deterministic hash-split key,
@@ -22,11 +22,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * Native Catalyst expression with `doGenCode` (the [[PolyHash]]
   * pattern) so the split stays inside whole-stage codegen; the
   * MessageDigest instance is per-codegen-object mutable state, reused
-  * across rows instead of re-looked-up per call.
+  * across rows instead of re-looked-up per call. The string input type
+  * is declared, so the analyzer casts a non-string child to string
+  * (the SQL spelling's `md5(cast(x as string))`) instead of the
+  * evaluator reading it as UTF8String.
   */
-case class Md5Prefix32(child: Expression) extends UnaryExpression {
+case class Md5Prefix32(child: Expression)
+    extends UnaryExpression with ImplicitCastInputTypes {
 
   override def dataType: DataType = LongType
+  override def inputTypes = Seq(StringType)
   override def prettyName: String = "md5_prefix32"
 
   private def prefix(bytes: Array[Byte]): Long = {

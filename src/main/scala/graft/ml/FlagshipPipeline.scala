@@ -20,10 +20,10 @@ object FlagshipPipeline {
 
   final case class Result(trainMse: Double, forecast: DataFrame)
 
-  /** Stage builders — shared verbatim by [[run]] and
-    * [[graft.tools.FlagshipProbe]] so the probe's per-stage timings
-    * can never drift from the shipped composition (round-8 review
-    * finding: the probe used to copy these blocks). */
+  /** Stage builders of [[run]], named so each stage can be forced and
+    * timed on its own without copying the composition; the measured
+    * stage timings are in SCALING.md, "Flagship pipeline end-to-end at
+    * 10×". */
   def dailyOf(spark: SparkSession, sfDir: String): DataFrame =
     // ingest + dedup + pivot (ref 流行音乐趋势预测.md:29-98 modernized)
     Pivot.dailyUserCounters(Ingest.dedup(Tables.events(spark, sfDir)))

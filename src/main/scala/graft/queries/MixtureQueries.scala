@@ -231,9 +231,10 @@ object MixtureQueries {
 
   /** The packing plan over any (doc_id, text) frame — reused by
     * MixtureSpec for the budget/contiguity properties. Implementation
-    * moved to [[graft.text.CorpusPipeline.packedBins]] (the pipeline's
-    * final stage must be THIS plan, not a copy — the FlagshipProbe
-    * stage-sharing precedent). */
+    * moved to [[graft.text.CorpusPipeline.packedBins]]: the pipeline's
+    * final stage must be THIS plan, not a copy, so the stage timings in
+    * SCALING.md ("Corpus curation pipeline end-to-end") measure the
+    * shipped packing. */
   def packedBins(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     graft.text.CorpusPipeline.packedBins(docs)
 

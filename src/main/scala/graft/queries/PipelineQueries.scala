@@ -762,8 +762,8 @@ object PipelineQueries {
     * boundary) flips the funnel hash. The catalog entry runs the
     * exact-Jaccard pair regime; the MinHash-LSH regime (the 100 TB
     * candidate path, same downstream plan) is parity-pinned in
-    * CorpusPipelineSpec and stage-timed at amplified scale by
-    * tools/CorpusProbe. */
+    * CorpusPipelineSpec; its amplified-scale stage timings are in
+    * SCALING.md, "Corpus curation pipeline end-to-end". */
   val q284CorpusFunnel = GraftQuery(
     "q284_corpus_funnel",
     "end-to-end curation funnel: docs+tokens surviving each pipeline stage",

@@ -37,10 +37,15 @@ object IvfLayout {
     * (the resolved value is baked into the layout directory name),
     * but `DataFrame.count()` still runs a Spark job per call — one
     * fixed-cost job inside EVERY consumer query (q83/q143/q202/q203).
-    * Memoized per (session, sfDir) exactly like Spark's own
-    * FileIndex caching; never caches query results. */
+    * Keyed by the stamped layout root, the staleness rule of every
+    * other layout: a regenerated fixture at the same path gets a new
+    * stamp and so a fresh count. Never caches query results. */
   private val countMemo =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
+  private[graft] def corpusCount(s: SparkSession, sfDir: String): Long =
+    countMemo.computeIfAbsent(SourceLayout.root("graft_ivf", sfDir),
+      _ => Tables.embeddings(s, sfDir).count())
 
   private def root(sfDir: String, nCells: Int, seed: Long, maxIter: Int): String =
     s"${SourceLayout.root("graft_ivf", sfDir)}/c${nCells}_s${seed}_i${maxIter}_v$LayoutVersion"
@@ -57,8 +62,7 @@ object IvfLayout {
             seed: Long = 42L, maxIter: Int = 8): (DataFrame, DataFrame) = {
     val cells =
       if (nCells > 0) nCells
-      else Ivf.cellsFor(countMemo.computeIfAbsent(sfDir,
-        d => Tables.embeddings(s, d).count()))
+      else Ivf.cellsFor(corpusCount(s, sfDir))
     val base = root(sfDir, cells, seed, maxIter)
     val corpusDir = s"$base/corpus"
     val centDir = s"$base/centroids"

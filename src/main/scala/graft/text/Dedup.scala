@@ -488,7 +488,8 @@ object Dedup {
     //     for — a giant bucket that IS one duplicate class — every
     //     anchor passes verification, so the class stays one
     //     component BY CONSTRUCTION (the coin alone attached only
-    //     ~56% of a 2000-doc clique; CapProbe measured it).
+    //     ~56% of a 2000-doc clique; SCALING.md "Known cliffs",
+    //     cliff 1, has the capped-vs-uncapped measurements).
     //
     // Soundness: anchors and thinned pairs alike pass the exact
     // pair-local Jaccard verification below, so there are never false

@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
 object Ivf {
 
   /** Count-driven quantizer geometry — the IVF application of the
-    * measured fixed-geometry lesson (tools/CrossoverBench, round 6:
-    * fixed LSH plane counts INVERT at scale, hence
+    * measured fixed-geometry lesson (SCALING.md "The crossover,
+    * measured": fixed LSH plane counts INVERT at scale, hence
     * [[Dedup.lshPlanesFor]]; a fixed 16-cell IVF has the same failure
     * mode — cell size grows O(n), so the probed candidate set stays a
     * constant fraction of the corpus and the "index" degenerates to a

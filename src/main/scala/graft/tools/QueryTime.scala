@@ -1,49 +1,28 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Bench
 
-/** Builder-side profiler (like PlanAudit/MinHashAb): time named
-  * catalog queries for N reps each, printing every rep — separates
-  * real plan cost from co-tenant noise bursts. Usage:
-  *   runMain graft.tools.QueryTime <sfDir> <reps> <name> [<name>...]
+/** Same-session A/B timer: times catalog queries (the named ones, or
+  * all) for N reps each through Bench's noop-sink run and prints every
+  * rep (-1 marks a failed rep), so real plan cost separates from
+  * co-tenant noise bursts. Usage:
+  *   runMain graft.tools.QueryTime <sfDir> <reps> [<name>...]
+  * SPARK_GRAFT_SKIP_WARM=1 skips the layout warm: profiling a
+  * layout-free query on a cold warehouse shouldn't pay the full
+  * multi-layout build.
   */
 object QueryTime {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val reps = args(1).toInt
-    val names = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Bench.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).selectExpr("sum(id)").collect()
-    // same layout warm as Bench: a cold warehouse must not bill a
-    // write-once layout build to the first rep of a profiled query.
-    // SPARK_GRAFT_SKIP_WARM=1 opts out — profiling a layout-free query
-    // on a cold warehouse shouldn't pay the full multi-layout build.
-    if (!sys.env.get("SPARK_GRAFT_SKIP_WARM").contains("1"))
-      try graft.sources.Layouts.warm(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[qt] layout warm failed: ${e.getMessage}")
-      }
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
-    spark.catalog.clearCache()
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(t => names(t._1)).foreach { case (name, fn) =>
-        val times = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          // noop sink, same as Bench: count() would strip final sorts
-          // and prune the output projection
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val dt = (System.nanoTime() - t0) / 1e9
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-          spark.catalog.clearCache()
-          dt
-        }
-        println(f"[qt] $name%-28s ${times.map(t => f"$t%.2f").mkString(" ")}")
-      }
+    val selected = Bench.select(args.drop(2).toSet)
+    val spark = Bench.session()
+    Bench.warm(spark, sfDir,
+      layouts = !sys.env.get("SPARK_GRAFT_SKIP_WARM").contains("1"))
+    selected.foreach { q =>
+      val times = (1 to reps).map(_ => Bench.timeOnce(spark, sfDir, q))
+      println(f"[qt] ${q.name}%-28s ${times.map(t => f"$t%.2f").mkString(" ")}")
+    }
     spark.stop()
   }
 }

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,9 +20,14 @@ class Md5PrefixSpec extends AnyFunSuite {
     expr("cast(conv(substring(md5(cast(x as string)), 1, 8), 16, 10) as bigint)")
 
   test("codegen path matches the SQL spelling over a key range") {
+    // the int child bypasses the facade's cast: the declared input type
+    // must make the analyzer insert it
+    val direct = GraftShims.column(
+      Md5Prefix32(GraftShims.expression(col("x").cast("int"))))
     val diff = spark.range(0, 100000).toDF("x")
-      .select(sqlForm.as("a"), Md5Prefix.md5_prefix32(col("x")).as("b"))
-      .where(col("a") =!= col("b")).count()
+      .select(sqlForm.as("a"), Md5Prefix.md5_prefix32(col("x")).as("b"),
+        direct.as("c"))
+      .where(col("a") =!= col("b") || col("a") =!= col("c")).count()
     assert(diff === 0L)
   }
 

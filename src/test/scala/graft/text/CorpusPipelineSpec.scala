@@ -31,8 +31,9 @@ class CorpusPipelineSpec extends AnyFunSuite {
     // the gate is real: these stages actually drop something on the
     // fixture (a stage that filters nothing tests nothing). The
     // sf0.001 fixture has no exact-duplicate training docs, so the
-    // exact-dedup stage's drop is exercised by CorpusProbe's amplified
-    // corpus (20% exact-copy variants) and by sf0.1 instead.
+    // exact-dedup stage's drop is exercised by sf0.1 and by the
+    // amplified corpus (20% exact-copy variants) of SCALING.md's
+    // "Corpus curation pipeline end-to-end".
     Seq("c_near_dedup", "d_quality", "f_mixed").foreach {
       st =>
         val prev = order(order.indexOf(st) - 1)
